@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * [[Dedup]]'s MinHash-LSH banding (X2) with [[IncrementalDedup]]'s
   * batch-vs-corpus shape (X27): a daily ingest batch is probed against
   * the accumulated corpus's PERSISTED band index, so near-duplicate
-  * admission control runs per batch without ever re-scanning — let
-  * alone re-shuffling — the corpus.
+  * admission control runs per batch without re-scanning the corpus
+  * text — and, under step 4's count gate, without shuffling any corpus
+  * table.
   *
   * Production seam: [[Index]] is the pair of frames a pipeline persists
   * once per corpus version (the band table `(id, band_idx, band_hash)`
@@ -17,10 +18,10 @@ import org.apache.spark.sql.functions._
   * exact verify reads); per batch only [[matches]] runs. Dataflow, in
   * corpus-touch order:
   *
-  *   1. the batch's band keys (|batch|·bands rows, distinct-keyed)
-  *      BROADCAST against the corpus band index — a map-side left-semi
-  *      that streams the index once and keeps only bucket-matched
-  *      corpus rows (candidate-sized from here on);
+  *   1. the batch's band keys (|batch|·bands rows; a left-semi build
+  *      side needs no dedup) BROADCAST against the corpus band index —
+  *      a map-side left-semi that streams the index once and keeps only
+  *      bucket-matched corpus rows (candidate-sized from here on);
   *   2. matched buckets are bounded to `maxBucket` corpus members
   *      (the degenerate-bucket guard — counted over the matched rows,
   *      which IS the full bucket count since the semi-join filters on
@@ -29,9 +30,10 @@ import org.apache.spark.sql.functions._
   *      bounded buckets — both frames candidate-sized;
   *   4. exact-Jaccard verify: candidates broadcast against the corpus
   *      set table (streamed once, map-side) under the
-  *      [[IncrementalDedup.DefaultMaxBroadcastCandidates]] count gate —
-  *      a duplicate-heavy batch falls back to a shuffle join of the
-  *      candidate-sized frames, never of the corpus.
+  *      [[IncrementalDedup.DefaultMaxBroadcastCandidates]] count gate.
+  *      Past the gate a duplicate-heavy batch falls back to a shuffle
+  *      join against the FULL `index.sets`, so that path shuffles the
+  *      corpus set table as well as the candidates.
   *
   * Recall physics are X2's, unchanged: banding only selects CANDIDATES;
   * survivors clear the exact Jaccard threshold, so the md5 and xxhash
@@ -85,9 +87,12 @@ object IncrementalNearDup {
     *
     * EAGER-ACTION NOTE (the [[IncrementalDedup.newRows]] contract): the
     * verify-path broadcast is count-gated, so one candidate-sized count
-    * job runs at call time; the batch-side frames persist across the
-    * count and the returned plan, released via
-    * [[graft.util.DeferredCleanup]].
+    * job runs at call time. The only frame persisted here is the
+    * candidate-pair frame, which the count and the returned plan both
+    * read; it is released via [[graft.util.DeferredCleanup]]. The batch
+    * frames are used as given: a caller that computes them in memory
+    * persists them itself ([[probe]] / [[probeOracled]] do), a stream
+    * passes its parquet reads.
     */
   def matches(index: Index, batchSets: DataFrame,
       batchBands: DataFrame, idCol: String, threshold: Double,
@@ -95,17 +100,12 @@ object IncrementalNearDup {
       maxBroadcastCandidates: Long =
         IncrementalDedup.DefaultMaxBroadcastCandidates): DataFrame = {
     val qb = batchBands.select(col(idCol).as("batch_id"),
-      col("band_idx"), col("band_hash")).persist()
-    graft.util.DeferredCleanup.enqueue(
-      () => { qb.unpersist(blocking = false); () })
+      col("band_idx"), col("band_hash"))
     // 1. bucket-key semi-join: the corpus band index streams ONCE
     // against the broadcast batch keys; output is candidate-sized
-    val keys = qb.select(col("band_idx"), col("band_hash")).distinct()
+    val keys = qb.select(col("band_idx"), col("band_hash"))
     val matched = index.bands
       .join(broadcast(keys), Seq("band_idx", "band_hash"), "left_semi")
-      .persist() // read by the bound window AND the candidate join
-    graft.util.DeferredCleanup.enqueue(
-      () => { matched.unpersist(blocking = false); () })
     // 2. degenerate-bucket guard over the matched (= full, the semi-
     // join never splits a bucket) corpus bucket counts. No lower bound:
     // unlike the self-join lanes' [2, max], a SINGLE corpus member is a
@@ -161,7 +161,9 @@ object IncrementalNearDup {
       bSets.select(col(idCol),
         Dedup.minHashSignatureFromBases(Dedup.md5Bases(col("__set")),
           numHashes).as("__sig")),
-      idCol, "__sig", bands, s => md5(s.cast("binary")))
+      idCol, "__sig", bands, s => md5(s.cast("binary"))).persist()
+    graft.util.DeferredCleanup.enqueue(
+      () => { bBands.unpersist(blocking = false); () })
     matches(idx, bSets, bBands, idCol, threshold, maxBucket)
   }
 
@@ -178,7 +180,9 @@ object IncrementalNearDup {
     val bBands = Dedup.bandedBuckets(
       bSets.select(col(idCol),
         Dedup.minHashSignature(col("__set"), numHashes).as("__sig")),
-      idCol, "__sig", bands)
+      idCol, "__sig", bands).persist()
+    graft.util.DeferredCleanup.enqueue(
+      () => { bBands.unpersist(blocking = false); () })
     matches(idx, bSets, bBands, idCol, threshold, maxBucket)
   }
 }

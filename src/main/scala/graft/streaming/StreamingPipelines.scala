@@ -998,21 +998,26 @@ object StreamingPipelines {
         // the checkpoint — no separate localCheckpoint jobs), and the
         // probe index is the union of the compacted generation and the
         // per-batch dirs of EARLIER batches, so probe-before-merge
-        // needs no ordering tricks at all
+        // needs no ordering tricks at all. Every state read passes the
+        // schema of the frame this batch wrote: all state dirs hold
+        // that schema, and a read without one costs a parquet
+        // schema-inference job.
         val setsDir = s"$statePath/sets/b$batchId"
         val bandsDir = s"$statePath/bands/b$batchId"
-        graft.dedup.Dedup.shingleSets(spreadByBytes(batch), idCol,
-            textCol, 3)
-          .write.mode("overwrite").parquet(setsDir)
-        val sets = s.read.parquet(setsDir)
-        graft.dedup.Dedup.bandedBuckets(
-            sets.select(col(idCol),
-              graft.dedup.Dedup.minHashSignatureFromBases(
-                graft.dedup.Dedup.md5Bases(col("__set")), 128)
-                .as("__sig")),
-            idCol, "__sig", 32, x => md5(x.cast("binary")))
-          .write.mode("overwrite").parquet(bandsDir)
-        val bands = s.read.parquet(bandsDir)
+        val setsOut = graft.dedup.Dedup.shingleSets(spreadByBytes(batch),
+          idCol, textCol, 3)
+        setsOut.write.mode("overwrite").parquet(setsDir)
+        val setsRead = s.read.schema(setsOut.schema)
+        val sets = setsRead.parquet(setsDir)
+        val bandsOut = graft.dedup.Dedup.bandedBuckets(
+          sets.select(col(idCol),
+            graft.dedup.Dedup.minHashSignatureFromBases(
+              graft.dedup.Dedup.md5Bases(col("__set")), 128)
+              .as("__sig")),
+          idCol, "__sig", 32, x => md5(x.cast("binary")))
+        bandsOut.write.mode("overwrite").parquet(bandsDir)
+        val bandsRead = s.read.schema(bandsOut.schema)
+        val bands = bandsRead.parquet(bandsDir)
         val upto = readMarker(fs, statePath)
         if (upto > batchId)
           throw new IllegalStateException(
@@ -1044,8 +1049,8 @@ object StreamingPipelines {
         val out =
           if (earlier.nonEmpty) {
             val idx = graft.dedup.IncrementalNearDup.Index(
-              s.read.parquet(earlier.map(_._2): _*),
-              s.read.parquet(earlier.map(_._1): _*))
+              bandsRead.parquet(earlier.map(_._2): _*),
+              setsRead.parquet(earlier.map(_._1): _*))
             graft.dedup.IncrementalNearDup.matches(idx, sets, bands,
               idCol, threshold)
           } else {
@@ -1070,9 +1075,9 @@ object StreamingPipelines {
         // earlier crash window, so the layout is self-healing.
         if (batchId - upto >= compactEvery) {
           val g = s"$statePath/compacted_g$batchId"
-          s.read.parquet(earlier.map(_._1): _*)
+          setsRead.parquet(earlier.map(_._1): _*)
             .write.mode("overwrite").parquet(s"$g/sets")
-          s.read.parquet(earlier.map(_._2): _*)
+          bandsRead.parquet(earlier.map(_._2): _*)
             .write.mode("overwrite").parquet(s"$g/bands")
           writeMarker(fs, statePath, batchId)
           Seq("sets", "bands").foreach { kind =>

@@ -2,6 +2,11 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.ListenerBusShim
+
 import graft.SparkSpec
 
 /** Pins the r12-directed state layer of
@@ -17,7 +22,10 @@ import graft.SparkSpec
   *     [[graft.dedup.IncrementalNearDup.Index]] layout, keeping the
   *     per-batch listing bounded by `compactEvery` tail dirs + 1
   *     generation on an arbitrarily long stream, without changing a
-  *     single emitted match.
+  *     single emitted match;
+  *  3. the Spark job count of a probing and of a compacting micro-batch,
+  *     so a schema-inference read or a one-use persist that creeps back
+  *     into the batch path fails here, not only in a benchmark.
   */
 class NearDupStreamStateSpec extends SparkSpec {
   import spark.implicits._
@@ -144,5 +152,41 @@ class NearDupStreamStateSpec extends SparkSpec {
       (0L until 8L).toSet)
     assert(spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$state/sets").count() === 4L)
+  }
+
+  test("a probing micro-batch runs 12 Spark jobs and a compacting one " +
+      "14 (6 one-file batches, compactEvery = 4)") {
+    val jobsByBatch = mutable.Map.empty[Long, Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach { b =>
+            jobsByBatch.synchronized {
+              jobsByBatch(b.toLong) = jobsByBatch.getOrElse(b.toLong, 0) + 1
+            }
+          }
+    }
+    // one identical doc per wave: every probe finds candidates, so no
+    // batch takes an empty-input shortcut
+    val waves = (0L until 6L).map(i => Seq(i -> doc(1)))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      drain(waves, tmpDir("ndst_state_jobs"), compactEvery = 4)
+      ListenerBusShim.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = jobsByBatch.synchronized(jobsByBatch.toMap)
+    // batch 0 probes nothing; batch 4 folds batches 0..3 into
+    // compacted_g4; batches 1, 2, 3 and 5 only probe
+    val probing = Seq(1L, 2L, 3L, 5L).map(b => b -> jobs.getOrElse(b, 0))
+    assert(probing.forall(_._2 == 12),
+      "a probing batch must run 12 jobs (20 before state reads carried " +
+        "their schema and the probe dropped its redundant stages): " +
+        s"$probing (all batches: $jobs)")
+    assert(jobs.getOrElse(4L, 0) === 14,
+      s"the compacting batch must run 14 jobs (24 before): $jobs")
+    assert(jobs.getOrElse(0L, 0) === 3,
+      "the first batch, with no index to probe, must run 3 jobs " +
+        s"(5 before): $jobs")
   }
 }
